@@ -210,37 +210,3 @@ def gen_docs(n_docs: int = 500, seed: int = 42) -> list[dict]:
                 "golden_n_blocks": g2["n_blocks"],
             })
     return rows
-
-
-def gen_pdf_pages(n_docs: int = 40, seed: int = 42) -> list[dict]:
-    """Layout-branch fixture (FIXTURES.md §2): synthetic 1- and 2-column
-    pages of word boxes; golden reading order defined by the layout kernel.
-
-    Keys: url, page, blocks (list of (x0,y0,x1,y1,text)).
-    """
-    rng = random.Random(seed + 1)
-    rows = []
-    for d in range(n_docs):
-        url = f"https://pdfhost.example/doc/{d}.pdf"
-        for page in range(rng.randint(1, 3)):
-            two_col = rng.random() < 0.5
-            boxes = []
-            cols = ((50.0, 280.0), (320.0, 550.0)) if two_col \
-                else ((50.0, 550.0),)
-            for cx0, cx1 in cols:
-                y = 60.0
-                for _ in range(rng.randint(3, 8)):  # lines
-                    x = cx0
-                    for _ in range(rng.randint(2, 6)):  # words per line
-                        w = rng.choice(_WORDS)
-                        width = 8.0 * len(w)
-                        if x + width > cx1:
-                            break
-                        boxes.append((x, y, x + width, y + 12.0, w))
-                        x += width + rng.choice([4.0, 5.0, 6.0])
-                    y += rng.choice([16.0, 18.0])
-            # header + footer spanning full width
-            boxes.append((50.0, 20.0, 550.0, 32.0, f"doc{d}-header"))
-            boxes.append((50.0, 760.0, 550.0, 772.0, f"page-{page}"))
-            rows.append({"url": url, "page": page, "blocks": boxes})
-    return rows

@@ -18,8 +18,6 @@ All decisions use integer/ratio thresholds with stable tie-breaks
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from my_ocr_spark.kernel.htmlparse import Block, parse_blocks
 
 # Classification thresholds (fixed; the analog of db_decode's
@@ -29,15 +27,6 @@ MAX_LINK_DENSITY = 0.33       # boilerplate threshold (Boilerpipe-style)
 MIN_WORDS = 4
 SHORT_KEEP_BETWEEN = True     # neighbor smoothing: keep short block between kept
 BLOCK_SEP = "\n\n"            # separator between kept blocks in output text
-
-
-@dataclass
-class Span:
-    """Char span of one kept block inside the extracted text."""
-
-    start: int
-    end: int
-    block_id: int
 
 
 def score_block(b: Block) -> float:

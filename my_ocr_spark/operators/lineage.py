@@ -9,18 +9,24 @@ The reference's analog is checkpoint/resume of training runs
   order-insensitive XOR-fold of xxhash64(url, text) so it's stable under
   intra-partition reordering.
 * ``write_with_lineage`` — writes data partitioned by a deterministic
-  bucket column + a _lineage/ manifest per bucket. A resumed job calls
-  ``completed_buckets`` and processes only missing buckets, overwriting
-  per-bucket directories (idempotent overwrite-by-partition — the
-  parquet-manifest emulation of Iceberg snapshot commit; with Iceberg jars
-  present the same API maps to format("iceberg") + snapshot metadata).
+  bucket column + a _lineage/ manifest per bucket. Every pending bucket
+  is committed by one pass: one dynamic-overwrite parquet write of all of
+  them, one ``groupBy(_bucket)`` stats job over the files just committed,
+  then one atomic manifest per bucket. A resumed job calls
+  ``completed_buckets`` and writes only the buckets without a manifest
+  (idempotent overwrite-by-partition — the parquet-manifest emulation of
+  Iceberg snapshot commit; with Iceberg jars present the same API maps to
+  format("iceberg") + snapshot metadata).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 BUCKET_COL = "_bucket"
 
@@ -35,21 +41,21 @@ def with_bucket(df: DataFrame, key_col: str = "url",
                           .cast("int"))
 
 
+def _stats(key_col: str, payload_col: str) -> list[Column]:
+    """doc_count, byte_count, checksum. The bit_xor fold of row hashes is
+    commutative → stable under reordering; any dropped/duplicated/mutated
+    row flips the checksum."""
+    return [F.count("*").alias("doc_count"),
+            F.sum(F.octet_length(payload_col)).alias("byte_count"),
+            F.bit_xor(F.xxhash64(key_col, payload_col)).alias("checksum")]
+
+
 def lineage_rows(df: DataFrame, key_col: str = "url",
                  payload_col: str = "text") -> DataFrame:
-    """(partition_id, doc_count, byte_count, checksum) per partition.
-
-    XOR-fold of row hashes is commutative → stable under partition-local
-    reordering; any dropped/duplicated row flips the checksum."""
-    h = F.xxhash64(key_col, payload_col)
+    """(partition_id, doc_count, byte_count, checksum) per partition."""
     return (df.withColumn("_pid", F.spark_partition_id())
               .groupBy(F.col("_pid").alias("partition_id"))
-              .agg(F.count("*").alias("doc_count"),
-                   F.sum(F.octet_length(payload_col)).alias("byte_count"),
-                   # bit_xor aggregate: order-insensitive fold
-                   F.expr(f"bit_xor(xxhash64({key_col}, {payload_col}))")
-                    .alias("checksum"))
-              .withColumn("checksum", F.col("checksum").cast("long")))
+              .agg(*_stats(key_col, payload_col)))
 
 
 def completed_buckets(out_dir: str) -> set[int]:
@@ -69,68 +75,52 @@ def write_with_lineage(df: DataFrame, out_dir: str, key_col: str = "url",
                        resume: bool = True) -> dict:
     """Idempotent bucket-partitioned write with per-bucket lineage commit.
 
-    Returns {written: [...], skipped: [...]}. Each bucket is written with
-    dynamic partition overwrite (re-running a bucket replaces it exactly),
-    then its manifest (doc_count, byte_count, checksum) is committed LAST —
-    a bucket without a manifest is treated as uncommitted and rewritten on
-    resume. This is the directory-manifest emulation of an Iceberg
+    Returns {written: [...], skipped: [...]}. All pending buckets (every
+    bucket, or on resume those without a manifest) commit in one pass:
+    one ``partitionBy(_bucket)`` parquet write with dynamic partition
+    overwrite, which leaves committed buckets' files untouched; one
+    ``groupBy(_bucket)`` stats job over the files just written, so each
+    manifest checksums the bytes on disk; then per bucket its manifest
+    (doc_count, byte_count, checksum; 0s for an empty bucket), committed
+    LAST by an atomic rename. A bucket without a manifest is uncommitted
+    and rewritten on resume. The input is scanned once, so it is not
+    cached. This is the directory-manifest emulation of an Iceberg
     snapshot commit (SURVEY.md §7.3.3)."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    b = with_bucket(df, key_col, n_buckets)
     done = completed_buckets(out_dir) if resume else set()
     todo = sorted(set(range(n_buckets)) - done)
     mdir = os.path.join(out_dir, "_lineage")
     os.makedirs(mdir, exist_ok=True)
-    written = []
-    if todo:
-        # each bucket is its own commit unit (two jobs: data + stats),
-        # so WITHOUT materialization the upstream pipeline would re-run
-        # 2 x len(todo) times — the per-bucket resume granularity is
-        # worth one disk-backed cache, not that
-        b = b.persist()
-    try:
-        written = _write_buckets(b, todo, out_dir, mdir,
-                                 key_col, payload_col)
-    finally:
-        if todo:
-            b.unpersist()
-    return {"written": written, "skipped": sorted(done)}
-
-
-def _write_buckets(b: DataFrame, todo, out_dir: str, mdir: str,
-                   key_col: str, payload_col: str) -> list:
-    import json
-
-    written = []
+    if not todo:
+        return {"written": [], "skipped": sorted(done)}
     for bucket in todo:
-        part = b.filter(F.col(BUCKET_COL) == bucket)
-        (part.write.mode("overwrite")
-             .partitionBy(BUCKET_COL)
-             .parquet(out_dir))
-        stats = (part.agg(
-            F.count("*").alias("doc_count"),
-            F.sum(F.octet_length(payload_col)).alias("byte_count"),
-            F.expr(f"bit_xor(xxhash64({key_col}, {payload_col}))")
-             .alias("checksum")).collect()[0])
-        manifest = {
-            "bucket": bucket,
-            "doc_count": stats["doc_count"],
-            "byte_count": int(stats["byte_count"] or 0),
-            "checksum": int(stats["checksum"] or 0),
-        }
+        # uncommit first; an empty bucket writes no directory, so nothing
+        # else would replace the rows an earlier run left in it
+        Path(mdir, f"bucket={bucket}.json").unlink(missing_ok=True)
+        shutil.rmtree(os.path.join(out_dir, f"{BUCKET_COL}={bucket}"),
+                      ignore_errors=True)
+    b = with_bucket(df, key_col, n_buckets).filter(
+        F.col(BUCKET_COL).isin(todo))
+    (b.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(BUCKET_COL)
+      .parquet(out_dir))
+    stats = {r[0]: r[1:] for r in
+             df.sparkSession.read.schema(b.schema).parquet(out_dir)
+               .filter(F.col(BUCKET_COL).isin(todo))
+               .groupBy(BUCKET_COL).agg(*_stats(key_col, payload_col))
+               .collect()}
+    for bucket in todo:
+        doc_count, byte_count, checksum = stats.get(bucket, (0, 0, 0))
+        manifest = {"bucket": bucket, "doc_count": doc_count,
+                    "byte_count": byte_count or 0, "checksum": checksum}
         tmp = os.path.join(mdir, f".bucket={bucket}.json.tmp")
-        final = os.path.join(mdir, f"bucket={bucket}.json")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
-        os.replace(tmp, final)  # atomic commit point
-        written.append(bucket)
-    return written
+        os.replace(tmp, os.path.join(mdir, f"bucket={bucket}.json"))
+    return {"written": todo, "skipped": sorted(done)}
 
 
 def read_lineage_manifests(out_dir: str) -> list[dict]:
-    import json
-
     mdir = os.path.join(out_dir, "_lineage")
     out = []
     for b in sorted(completed_buckets(out_dir)):

@@ -4,11 +4,26 @@ Structured Streaming wrapper."""
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from my_ocr_spark.operators.lineage import (
     completed_buckets, lineage_rows, read_lineage_manifests,
     write_with_lineage,
 )
+
+
+def _bucket_files(out, bucket):
+    d = os.path.join(out, f"_bucket={bucket}")
+    return {n: os.stat(os.path.join(d, n)).st_mtime_ns
+            for n in os.listdir(d)}
+
+
+def _recomputed(spark, out):
+    """(doc_count, checksum) per bucket, from the committed parquet."""
+    return {r[0]: (r[1], r[2]) for r in
+            spark.read.parquet(out).groupBy("_bucket").agg(
+                F.count("*"),
+                F.bit_xor(F.xxhash64("url", "text"))).collect()}
 
 
 def test_lineage_rows_cover_all_docs(spark, docs_df):
@@ -42,8 +57,11 @@ def test_write_with_lineage_resume(spark, docs_df, tmp_path):
     for b in (1, 3):
         os.remove(os.path.join(out, "_lineage", f"bucket={b}.json"))
     assert completed_buckets(out) == {0, 2}
+    kept = {b: _bucket_files(out, b) for b in (0, 2)}
     r2 = write_with_lineage(df, out, n_buckets=4)
     assert sorted(r2["written"]) == [1, 3] and sorted(r2["skipped"]) == [0, 2]
+    # committed buckets are not rewritten: same files, same mtimes
+    assert {b: _bucket_files(out, b) for b in (0, 2)} == kept
     # idempotent: same rows, same manifests
     assert spark.read.parquet(out).count() == df.count()
     manifests = {m["bucket"]: m for m in read_lineage_manifests(out)}
@@ -52,6 +70,90 @@ def test_write_with_lineage_resume(spark, docs_df, tmp_path):
     # third run: everything skipped
     r3 = write_with_lineage(df, out, n_buckets=4)
     assert r3["written"] == []
+
+
+def test_write_with_lineage_kill_between_write_and_commit(
+        spark, docs_df, tmp_path, monkeypatch):
+    out = str(tmp_path / "sink")
+    df = docs_df.select("url", "warc_ts", "text", "lang")
+
+    def killed(src, dst):
+        raise KeyboardInterrupt("killed before the manifest commit")
+
+    # the data write completes, the first manifest rename dies
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", killed)
+        with pytest.raises(KeyboardInterrupt):
+            write_with_lineage(df, out, n_buckets=4)
+    assert spark.read.parquet(out).count() == df.count()
+    assert completed_buckets(out) == set()
+    assert read_lineage_manifests(out) == []
+    # resume: no bucket was committed, so every bucket is rewritten
+    r = write_with_lineage(df, out, n_buckets=4)
+    assert r == {"written": [0, 1, 2, 3], "skipped": []}
+    manifests = {m["bucket"]: (m["doc_count"], m["checksum"])
+                 for m in read_lineage_manifests(out)}
+    assert manifests == _recomputed(spark, out)
+    assert sum(n for n, _ in manifests.values()) == df.count()
+
+
+def test_write_with_lineage_rewrite_drops_stale_rows(spark, docs_df,
+                                                     tmp_path):
+    """A rewritten bucket holds only this run's rows, even when it is
+    empty now and an earlier run left rows in it."""
+    out = str(tmp_path / "sink")
+    df = docs_df.select("url", "text")
+    write_with_lineage(df, out, n_buckets=4)
+    only0 = (df.withColumn("b", F.pmod(F.xxhash64("url"), F.lit(4)))
+               .filter("b = 0").drop("b"))
+    r = write_with_lineage(only0, out, n_buckets=4, resume=False)
+    assert r == {"written": [0, 1, 2, 3], "skipped": []}
+    assert spark.read.parquet(out).count() == only0.count()
+    manifests = {m["bucket"]: (m["doc_count"], m["checksum"])
+                 for m in read_lineage_manifests(out)}
+    assert manifests == {**_recomputed(spark, out), 1: (0, 0), 2: (0, 0),
+                         3: (0, 0)}
+
+
+def test_write_with_lineage_leaves_session_conf(spark, docs_df, tmp_path):
+    """Dynamic partition overwrite is a writer option, not a session
+    setting that leaks into every later overwrite."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out = str(tmp_path / "sink")
+    df = docs_df.select("url", "text")
+    spark.conf.set(key, "static")
+    try:
+        write_with_lineage(df, out, n_buckets=2)
+        assert spark.conf.get(key) == "static"
+        # a static-overwrite session still replaces only pending buckets
+        kept = _bucket_files(out, 0)
+        os.remove(os.path.join(out, "_lineage", "bucket=1.json"))
+        assert write_with_lineage(df, out, n_buckets=2)["written"] == [1]
+        assert spark.conf.get(key) == "static"
+        assert _bucket_files(out, 0) == kept
+    finally:
+        spark.conf.unset(key)
+
+
+def test_write_with_lineage_jobs_independent_of_buckets(
+        spark, docs_df, tmp_path):
+    """One write and one stats pass for all pending buckets, not a write
+    and a stats job per bucket."""
+    sc = spark.sparkContext
+    df = docs_df.select("url", "text")
+    jobs = {}
+    for n in (4, 16):
+        group = f"lineage-jobs-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            r = write_with_lineage(df, str(tmp_path / f"sink{n}"),
+                                   n_buckets=n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert r["written"] == list(range(n))
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[4] == jobs[16] <= 3, jobs
 
 
 def test_streaming_extract_matches_batch(spark, docs_df, tmp_path):

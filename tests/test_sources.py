@@ -176,10 +176,12 @@ def test_standalone_cluster_end_to_end(spark, docs_df, tmp_path):
         import pytest
         pytest.skip("no standalone spark-class scripts in container")
 
-    def _free_port() -> int:
-        with socket.socket() as s:
-            s.bind(("127.0.0.1", 0))
-            return s.getsockname()[1]
+    # both sockets stay bound until both ports are read, so the master
+    # and UI ports cannot collide
+    with socket.socket() as a, socket.socket() as b:
+        a.bind(("127.0.0.1", 0))
+        b.bind(("127.0.0.1", 0))
+        master_port, ui_port = a.getsockname()[1], b.getsockname()[1]
 
     from scripts.bench_cluster import SPARK_SUBMIT, Cluster, _clean_env
     from scripts.make_pyfiles import build
@@ -202,8 +204,8 @@ def test_standalone_cluster_end_to_end(spark, docs_df, tmp_path):
         "ex.select('url', F.md5('text').alias('h'))"
         ".repartition(4).write.parquet(sys.argv[2])\n"
         "spark.stop()\n")
-    with Cluster(2, str(tmp_path / "cluster"), master_port=_free_port(),
-                 ui_port=_free_port(), cores_per_worker=2,
+    with Cluster(2, str(tmp_path / "cluster"), master_port=master_port,
+                 ui_port=ui_port, cores_per_worker=2,
                  memory="2g") as c:
         p = subprocess.run(
             [SPARK_SUBMIT, "--master", c.master_url,
