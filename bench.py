@@ -6,9 +6,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 The flagship extraction benchmark amplifies the documents table ~40x in
 Spark (JVM-side concat — deterministic) to a ~200k-page corpus so the
-mapInPandas stage dominates, matching the north metric (docs/sec, MB/sec
+mapInArrow stage dominates, matching the north metric (docs/sec, MB/sec
 extracted). Scaling-efficiency runs (local[8] vs local[32]) live in
-scripts/bench_scaling.py and write BENCH/BASELINE.md.
+scripts/bench_scaling.py, which prints a section for BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -21,41 +21,34 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def build_amplified_corpus(spark, sf_dir: str, copies: int,
-                           partitions: int | None = None):
-    """documents → CC-style page table ×copies (unique urls per copy).
+HEADLINE = [
+    "pricing_summary",          # partial+final agg over the fact table
+    "top_revenue_nation",       # broadcast-dim multi-join
+    "sessionize_events",        # window sessionization
+    "iou_theta_join_match",     # theta-join greedy matching
+    "hmean_per_image",          # metric aggregation
+    "topk_per_group",           # per-group rank
+    "ngram_jaccard_dups",       # inverted-index dedup join
+    "embedding_cosine_topk",    # similarity search
+    "minhash_lsh_candidates",   # LSH dedup (pandas UDF + band join)
+    "pdf_reading_order",        # layout branch (streaming grouped map)
+    "interval_range_join",      # banded range join (sparse overlaps)
+    "semantic_dedup_keep",      # SemDeDup: codebook + cell-local pairs
+    "duplicate_span_pairs",     # Lee-et-al. substring-span dedup
+    "gopher_repetition_filters",  # repetition quality gates
+    "curation_mix_report",      # e2e: extract -> gates -> mix shares
+    "db_decode_boundaries",     # bitmap decode: trace+unclip+minrect
+]
 
-    The source parquet is a single small file (one input split): without
-    an explicit repartition of the narrow rows, every downstream pandas
-    UDF would run on one core (measured: 32-core run at 0.43× the
-    single-thread kernel rate). html is synthesized after the shuffle."""
-    from pyspark.sql import functions as F
-    from my_ocr_spark.plans.flagship import synthesize_cc_docs
 
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism * 4
-    cc = synthesize_cc_docs(spark, sf_dir, partitions=partitions)
-    return (cc.withColumn("copy", F.explode(F.sequence(F.lit(0),
-                                                       F.lit(copies - 1))))
-              .withColumn("url", F.concat("url", F.lit("?v="),
-                                          F.col("copy").cast("string")))
-              .drop("copy"))
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-
+def start_session(app_name: str, sf_dir: str, cpus: str):
+    """local[cpus] session, warmed up; returns (spark, queries)."""
     from my_ocr_spark.session import get_spark
-    from my_ocr_spark.operators.extract import extract_docs
-    from pyspark.sql import functions as F
     import __spark_entry__ as E
 
-    spark = get_spark(app_name="bench", master=f"local[{cpus}]",
+    spark = get_spark(app_name=app_name, master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
-
     qs = E.queries()
     # warm-up: JVM JIT + parquet footer caches, so the first timed query
     # doesn't absorb cold-start
@@ -65,24 +58,21 @@ def main() -> None:
     # all worker spawns; one no-op batch per core is steady-state)
     spark.range(0, 32 * int(cpus), 1, int(cpus)).mapInPandas(
         lambda it: it, "id long").count()
-    headline = [
-        "pricing_summary",          # partial+final agg over the fact table
-        "top_revenue_nation",       # broadcast-dim multi-join
-        "sessionize_events",        # window sessionization
-        "iou_theta_join_match",     # theta-join greedy matching
-        "hmean_per_image",          # metric aggregation
-        "topk_per_group",           # per-group rank
-        "ngram_jaccard_dups",       # inverted-index dedup join
-        "embedding_cosine_topk",    # similarity search
-        "minhash_lsh_candidates",   # LSH dedup (pandas UDF + band join)
-        "pdf_reading_order",        # layout branch (streaming grouped map)
-        "interval_range_join",      # banded range join (sparse overlaps)
-        "semantic_dedup_keep",      # SemDeDup: codebook + cell-local pairs
-        "duplicate_span_pairs",     # Lee-et-al. substring-span dedup
-        "gopher_repetition_filters",  # repetition quality gates
-        "curation_mix_report",      # e2e: extract -> gates -> mix shares
-        "db_decode_boundaries",     # bitmap decode: trace+unclip+minrect
-    ]
+    return spark, qs
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+
+    from my_ocr_spark.operators.extract import extract_docs
+    from my_ocr_spark.plans.flagship import (
+        build_amplified_corpus, warm_extraction,
+    )
+    from pyspark.sql import functions as F
+
+    spark, qs = start_session("bench", sf_dir, cpus)
     # best-of-2 per query: the sandbox host has measured noise waves
     # (an untouched pure-JVM query swung 0.62→2.07 s minutes apart —
     # hypervisor neighbors, not this engine); the min of two
@@ -90,7 +80,7 @@ def main() -> None:
     # cost under uncontrolled external load. Protocol recorded in the
     # JSON ("runs_per_query").
     timings: dict[str, float] = {}
-    for name in headline:
+    for name in HEADLINE:
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
@@ -106,14 +96,7 @@ def main() -> None:
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                    os.environ.get("SPARK_GRAFT_ARROW_BATCH", "4096"))
     corpus = build_amplified_corpus(spark, sf_dir, copies)
-    stats_df = corpus.select(F.count("*").alias("n"),
-                             F.sum(F.octet_length("html")).alias("bytes"))
-    n_docs, n_bytes = stats_df.collect()[0]
-    # steady-state: spin up the python worker pool + JIT before timing.
-    # Must touch every partition — a limit() slice warms only one worker
-    # and the timed run then pays the other N spawns.
-    extract_docs(corpus.filter(
-        F.pmod(F.xxhash64("url"), F.lit(50)) == 0)).count()
+    n_docs, n_bytes = warm_extraction(corpus)
     wall = float("inf")
     for _ in range(2):  # best-of-2, same host-noise protocol as above
         t0 = time.perf_counter()

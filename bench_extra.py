@@ -11,6 +11,9 @@ Differences from bench.py (deliberate, guide §1.4):
   row, so column-pruned subtrees can't hide;
 * per-query job descriptions for UI/event-log attribution;
 * optional ``--explain`` dumps ``explain("formatted")`` to plans/r07/.
+
+The query list, session and warm-up are bench.py's own, so numbers are
+comparable.
 """
 
 from __future__ import annotations
@@ -20,16 +23,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "pricing_summary", "top_revenue_nation", "sessionize_events",
-    "iou_theta_join_match", "hmean_per_image", "topk_per_group",
-    "ngram_jaccard_dups", "embedding_cosine_topk", "minhash_lsh_candidates",
-    "pdf_reading_order", "interval_range_join", "semantic_dedup_keep",
-    "duplicate_span_pairs", "gopher_repetition_filters",
-    "curation_mix_report", "db_decode_boundaries",
-]
+from bench import HEADLINE, start_session
 
 
 def main() -> None:
@@ -47,18 +41,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from my_ocr_spark.session import get_spark
-    import __spark_entry__ as E
-
-    spark = get_spark(app_name="bench_extra", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = E.queries()
-
-    # same warm-up as bench.py so numbers are comparable
-    qs["pricing_summary"](spark, sf_dir).count()
-    spark.range(0, 32 * int(cpus), 1, int(cpus)).mapInPandas(
-        lambda it: it, "id long").count()
+    spark, qs = start_session("bench_extra", sf_dir, cpus)
 
     if explain:
         os.makedirs("plans/r07", exist_ok=True)

@@ -1,4 +1,4 @@
-"""Spark-side extraction operators: mapInPandas over the pure kernel.
+"""Spark-side extraction operators: mapInArrow over the pure kernel.
 
 The flagship pipeline (SURVEY.md §3.1 Spark equivalent):
 
@@ -7,7 +7,7 @@ The flagship pipeline (SURVEY.md §3.1 Spark equivalent):
          → pdf layout branch via layout.py kernels
 
 Scale discipline (north_rule / SURVEY.md §4):
-* one ``mapInPandas`` stage, no shuffle: blocks never leave their document,
+* one ``mapInArrow`` stage, no shuffle: blocks never leave their document,
   exactly like the reference's fan-out join staying in-process
   (``mmocr/utils/ocr.py:146-201``).
 * the fat ``html`` column is consumed inside this stage and NOT emitted —
@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from my_ocr_spark.kernel.extract import extract_main_text
@@ -117,16 +116,21 @@ def explode_blocks(docs: DataFrame) -> DataFrame:
     The detect-stage analog: the block table is what the reference's
     score-map decode emits as candidate regions
     (``mmocr/models/textdet/postprocess/wrapper.py:177-229``).
+    Same ``mapInArrow`` form as ``extract_docs``: the blocks of one input
+    batch are appended into per-column lists, then built into one Arrow
+    batch of BLOCKS_SCHEMA.
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("url", "block_id", "tag", "tag_path",
-                                    "depth", "text", "n_chars",
-                                    "n_link_chars", "n_words", "n_punct",
-                                    "is_heading", "in_nav_footer",
-                                    "score", "keep")}
-            for url, html in zip(pdf["url"], pdf["html"]):
+    schema = to_arrow_schema(BLOCKS_SCHEMA)
+
+    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        for batch in batches:
+            rows = {k: [] for k in schema.names}
+            for url, html in zip(batch.column(0).to_pylist(),
+                                 batch.column(1).to_pylist()):
                 _, blocks = parse_blocks(html)
                 keep = classify_blocks(blocks)
                 for b, k in zip(blocks, keep):
@@ -144,9 +148,9 @@ def explode_blocks(docs: DataFrame) -> DataFrame:
                     rows["in_nav_footer"].append(b.in_nav_footer)
                     rows["score"].append(score_block(b))
                     rows["keep"].append(bool(k))
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pydict(rows, schema=schema)
 
-    return docs.select("url", "html").mapInPandas(run, schema=BLOCKS_SCHEMA)
+    return docs.select("url", "html").mapInArrow(run, schema=BLOCKS_SCHEMA)
 
 
 def latest_snapshot(docs: DataFrame, key_col: str = "url",

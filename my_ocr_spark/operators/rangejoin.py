@@ -27,8 +27,22 @@ and this operator exists separately).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# bits of the fused (group, bucket) key that hold the signed bucket index
+_FUSE_BITS = 20
+
+
+def _bucket(coord: str, width: float) -> Column:
+    """``cast(coord / width as bigint)``, failing the query when it falls
+    outside the fused key's signed bucket field: such a bucket would
+    carry into the group bits and alias another group's cells."""
+    b = (F.col(coord) / width).cast("bigint")
+    return F.when(F.abs(b) >= 1 << (_FUSE_BITS - 1), F.raise_error(F.concat(
+        F.lit(f"band_overlap_join: {coord}="), F.col(coord).cast("string"),
+        F.lit(f" is outside the fused key range (|{coord}| < width * "
+              f"2^{_FUSE_BITS - 1} required)")))).otherwise(b)
 
 
 def band_overlap_join(
@@ -39,7 +53,6 @@ def band_overlap_join(
     end: str = "e",
     width: float = 128.0,
     suffix: str = "_r",
-    fuse_bits: int = 20,
 ) -> DataFrame:
     """All (left, right) rows in the same ``group`` whose [start, end)
     intervals overlap, each pair exactly once. Right-side columns are
@@ -49,16 +62,17 @@ def band_overlap_join(
 
     Caller contract for the fused key: ``group`` is integral and every
     truncated bucket index ``cast(coord / width as bigint)`` fits in a
-    signed ``fuse_bits``-bit range (|coord| < width * 2^(fuse_bits-1) —
-    half a million widths at the default), so
-    ``group * 2^fuse_bits + bucket`` is injective."""
+    signed ``_FUSE_BITS``-bit range (|coord| < width * 2^(_FUSE_BITS-1),
+    half a million widths), so ``group * 2^_FUSE_BITS + bucket`` is
+    injective. A coordinate outside it fails the query instead of
+    silently pairing across groups."""
     r = right
     for c in right.columns:
         r = r.withColumnRenamed(c, c + suffix)
     g_r, s_r, e_r = group + suffix, start + suffix, end + suffix
-    mult = 1 << fuse_bits
+    mult = 1 << _FUSE_BITS
 
-    # One FUSED long key (group * 2^fuse_bits + bucket) instead of the
+    # One FUSED long key (group * 2^_FUSE_BITS + bucket) instead of the
     # (group, bucket) pair, and each side's START bucket carried as an
     # integer column: the exactly-once test then compares two longs per
     # candidate pair instead of re-deriving cast(greatest(s, s_r) /
@@ -68,16 +82,14 @@ def band_overlap_join(
     # (trunc(max(s, s_r)/W) == max(trunc(s/W), trunc(s_r/W)) because
     # truncation toward zero is monotone non-decreasing, so the integer
     # max IS the intersection-start bucket.)
-    lb = (left.withColumn("_sb", (F.col(start) / width).cast("bigint"))
+    lb = (left.withColumn("_sb", _bucket(start, width))
               .withColumn("_k", F.explode(F.sequence(
                   F.col(group) * mult + F.col("_sb"),
-                  F.col(group) * mult
-                  + (F.col(end) / width).cast("bigint")))))
-    rb = (r.withColumn("_sb_r", (F.col(s_r) / width).cast("bigint"))
+                  F.col(group) * mult + _bucket(end, width)))))
+    rb = (r.withColumn("_sb_r", _bucket(s_r, width))
            .withColumn("_k_r", F.explode(F.sequence(
                F.col(g_r) * mult + F.col("_sb_r"),
-               F.col(g_r) * mult
-               + (F.col(e_r) / width).cast("bigint")))))
+               F.col(g_r) * mult + _bucket(e_r, width)))))
     # Shuffled-hash, not sort-merge: the bucket key is
     # deliberately low-cardinality-per-cell but HIGH-fanout (each cell
     # emits |A_c|x|B_c| pairs), and SMJ's pair generation iterates the

@@ -35,13 +35,10 @@ import tempfile
 import time
 import urllib.request
 
-# repo root derived from this file's location, not hardcoded, so the
-# script (and the test that imports it) works from any checkout
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
-sys.path.insert(0, os.path.join(_REPO, "scripts"))
+# importable as scripts.bench_cluster too (the e2e test uses Cluster)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench_scaling import host_cpu_ceiling  # noqa: E402
+from benchkit import host_ceiling, md5_work, run_child  # noqa: E402
 
 SPARK_HOME = os.environ.get("SPARK_HOME", "/opt/spark")
 SPARK_CLASS = os.path.join(SPARK_HOME, "bin", "spark-class")
@@ -57,7 +54,8 @@ def _port_open(host: str, port: int) -> bool:
         return s.connect_ex((host, port)) == 0
 
 # The job imports my_ocr_spark ONLY from the --py-files zip (PYTHONPATH is
-# stripped); corpus amplification is inlined (bench.py isn't in the zip).
+# stripped), so the corpus builder and the timed extraction are the
+# package's own (plans/flagship.py), shared with the local ladders.
 # The extraction and shuffle metrics are SEPARATE spark-submit apps:
 # whichever runs second in a shared app inherits the first's executor
 # state and reads 1.7-20x slow (measured both orders — a 1.5 s shuffle
@@ -69,29 +67,12 @@ import json, sys, time
 from pyspark.sql import SparkSession, functions as F
 sf_dir, copies, mode = sys.argv[1], int(sys.argv[2]), sys.argv[4]
 spark = SparkSession.builder.getOrCreate()
-from my_ocr_spark.plans.flagship import synthesize_cc_docs
-from my_ocr_spark.operators.extract import extract_docs, latest_snapshot
-total_cores = spark.sparkContext.defaultParallelism
-cc = synthesize_cc_docs(spark, sf_dir, partitions=total_cores * 4)
-corpus = (cc.withColumn("copy", F.explode(F.sequence(F.lit(0),
-                                                     F.lit(copies - 1))))
-            .withColumn("url", F.concat("url", F.lit("?v="),
-                                        F.col("copy").cast("string")))
-            .drop("copy"))
+from my_ocr_spark.plans.flagship import build_amplified_corpus, time_extraction
+from my_ocr_spark.operators.extract import latest_snapshot
+corpus = build_amplified_corpus(spark, sf_dir, copies)
 out = {"executors": int(sys.argv[3])}
 if mode == "extract":
-    n_docs, n_bytes = corpus.select(
-        F.count("*"), F.sum(F.octet_length("html"))).collect()[0]
-    # warm-up must touch EVERY partition (python worker pools spawn per
-    # executor; a limit() slice would leave 4N-1 cold spawns in the timing)
-    extract_docs(corpus.filter(
-        F.pmod(F.xxhash64("url"), F.lit(50)) == 0)).count()
-    t0 = time.perf_counter()
-    assert extract_docs(corpus).count() == n_docs
-    wall = time.perf_counter() - t0
-    out.update({"n_docs": int(n_docs), "mb": n_bytes / 1e6,
-                "wall_sec": wall, "docs_per_sec": n_docs / wall,
-                "mb_per_sec": n_bytes / 1e6 / wall})
+    out.update(time_extraction(corpus))
 else:
     # one real shuffle across executor JVMs: latest-snapshot dedup on
     # narrow columns (html consumed into octet_length, never shuffled).
@@ -234,7 +215,7 @@ def _submit(c: Cluster, n_workers: int, sf_dir: str, copies: int,
     job = os.path.join(tmp, "job.py")
     with open(job, "w") as f:
         f.write(_JOB)
-    p = subprocess.run(
+    return run_child(
         [SPARK_SUBMIT, "--master", c.master_url,
          "--conf", "spark.executor.cores=4",
          "--conf", "spark.executor.memory=4g",
@@ -262,18 +243,7 @@ def _submit(c: Cluster, n_workers: int, sf_dir: str, copies: int,
          "--conf", "spark.sql.adaptive.advisoryPartitionSizeInBytes=8m",
          "--py-files", zip_path,
          job, sf_dir, str(copies), str(n_workers), mode],
-        capture_output=True, text=True, timeout=1800, cwd=tmp,
-        env=_clean_env())
-    for line in reversed(p.stdout.strip().splitlines()):
-        try:
-            parsed = json.loads(line)
-        except ValueError:
-            continue
-        if isinstance(parsed, dict) and ("wall_sec" in parsed
-                                         or "shuffle_wall_sec" in parsed):
-            return parsed
-    raise RuntimeError(f"{n_workers} workers/{mode}: no measurement "
-                       f"(rc={p.returncode}); stderr: {p.stderr[-2000:]}")
+        f"{n_workers} workers/{mode}", cwd=tmp, env=_clean_env())
 
 
 def run_level(n_workers: int, sf_dir: str, copies: int,
@@ -299,7 +269,7 @@ def main() -> None:
     runs, probes = [], []
     try:
         for _ in range(ladders):
-            probes.append(host_cpu_ceiling())
+            probes.append(host_ceiling(md5_work))
             ladder = {e: run_level(e, sf_dir, copies, zip_path, tmp,
                                    pin_cpus=pin)
                       for e in (2, 8)}

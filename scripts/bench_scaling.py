@@ -1,127 +1,27 @@
 """Scaling-efficiency protocol (BASELINE.md §B / north_rule): run the
 IDENTICAL extraction job at two parallelism levels — local[8] (N) and
 local[32] (4N) — on the same input, report throughput at both plus
-efficiency = (T_4N / T_N) / 4, and write BENCH/BASELINE.md.
+efficiency = (T_4N / T_N) / 4.
 
-Each level runs in a fresh subprocess (a JVM's master/core count is fixed
-at SparkContext creation). The job is the flagship: synthesize the
-CC-style corpus (amplified ~40x → ~200k pages), latest-snapshot dedup is
-skipped here (measured separately) so the timed stage is pure extraction —
-the stage whose scaling the north_rule grades.
+Each level runs in a fresh subprocess (``benchkit.run_extraction``). The
+job is the flagship: synthesize the CC-style corpus (amplified ~40x →
+~200k pages), latest-snapshot dedup is skipped here (measured
+separately) so the timed stage is pure extraction — the stage whose
+scaling the north_rule grades.
 
-Usage: python scripts/bench_scaling.py [sf_dir] [copies]
+Prints a markdown section and a JSON summary to stdout; append them to
+the history yourself:
+
+    python scripts/bench_scaling.py [sf_dir] [copies] [ladders] >> BENCH/BASELINE.md
 """
 
 from __future__ import annotations
 
 import json
-import os
-import subprocess
+import statistics
 import sys
 
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, "/root/repo")
-cores, sf_dir, copies = sys.argv[1], sys.argv[2], int(sys.argv[3])
-from my_ocr_spark.session import get_spark
-from my_ocr_spark.operators.extract import extract_docs
-from bench import build_amplified_corpus
-from pyspark.sql import functions as F
-
-spark = get_spark(app_name=f"scaling-{cores}", master=f"local[{cores}]",
-                  shuffle_partitions=int(cores))
-spark.sparkContext.setLogLevel("ERROR")
-corpus = build_amplified_corpus(spark, sf_dir, copies)
-# materialize input stats outside the timed window
-n_docs, n_bytes = corpus.select(
-    F.count("*"), F.sum(F.octet_length("html"))).collect()[0]
-# warm-up (JIT, Arrow, python worker pool): must touch EVERY partition —
-# a limit() slice spawns only one worker and the timed run then pays the
-# other N spawns (~8 s serial, measured via Amdahl fit)
-from pyspark.sql import functions as _F
-extract_docs(corpus.filter(_F.pmod(_F.xxhash64("url"), _F.lit(50)) == 0)).count()
-t0 = time.perf_counter()
-out = extract_docs(corpus)
-n_out = out.count()
-wall = time.perf_counter() - t0
-assert n_out == n_docs
-# print BEFORE stop: a JVM that dies in its shutdown hooks (observed:
-# DAGScheduler.stop raising inside SparkContext.stop) must not discard
-# a completed measurement
-print(json.dumps({"cores": int(cores), "n_docs": int(n_docs),
-                  "mb": n_bytes / 1e6, "wall_sec": wall,
-                  "docs_per_sec": n_docs / wall,
-                  "mb_per_sec": n_bytes / 1e6 / wall}), flush=True)
-try:
-    spark.stop()
-except Exception:
-    pass
-"""
-
-
-def _md5_work(_):
-    import hashlib
-
-    h = b"x" * 1000
-    for _ in range(1_000_000):
-        h = hashlib.md5(h).digest()
-
-
-def host_cpu_ceiling() -> dict:
-    """Spark-free controlled experiment: N independent PROCESSES running
-    pure-CPU work (hashlib md5, no JVM, no Arrow, no shared state)
-    measure what fraction of per-core throughput the HOST itself retains
-    at each width. The 8→32 ratio is the hard ceiling for ANY job's
-    8→32 scaling efficiency on this machine — if independent processes
-    can't scale, no engine can. A real 4N-executor cluster adds machines
-    instead of saturating one, so the ceiling there is ~1.0."""
-    import multiprocessing as mp
-    import time
-
-    walls = {}
-    for n in (1, 8, 32):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            with mp.Pool(n) as p:
-                p.map(_md5_work, range(n))
-            best = min(best, time.perf_counter() - t0)
-        walls[n] = best
-    return {
-        "wall_1": round(walls[1], 3),
-        "wall_8": round(walls[8], 3),
-        "wall_32": round(walls[32], 3),
-        "retention_8": round(walls[1] / walls[8], 4),
-        "retention_32": round(walls[1] / walls[32], 4),
-        "ceiling_8_32": round(walls[8] / walls[32], 4),
-    }
-
-
-def run_level(cores: int, sf_dir: str, copies: int) -> dict:
-    env = dict(os.environ,
-               SPARK_GRAFT_JAVA_OPTS="-XX:ParallelGCThreads=4")
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), sf_dir, str(copies)],
-        capture_output=True, text=True, timeout=1800,
-        cwd="/root/repo", env=env)
-    # accept a completed measurement even if the JVM died in its
-    # shutdown hooks AFTER printing it (observed: DAGScheduler.stop
-    # raising during SparkContext.stop turns a finished run into
-    # returncode 1; the timed JSON line on stdout is the ground truth).
-    # Scan in reverse so a stray late warning line on stdout doesn't
-    # mask the valid measurement one line up.
-    for line in reversed(out.stdout.strip().splitlines()):
-        try:
-            parsed = json.loads(line)
-        except ValueError:
-            continue
-        # the measurement dict specifically — bare scalars ('NaN', a
-        # stray number) are also valid JSON and must not match
-        if isinstance(parsed, dict) and "wall_sec" in parsed:
-            return parsed
-    raise RuntimeError(
-        f"level {cores}: no JSON measurement on stdout "
-        f"(rc={out.returncode}); stderr tail: {out.stderr[-2000:]}")
+from benchkit import host_ceiling, md5_work, run_extraction
 
 
 def main() -> None:
@@ -142,14 +42,13 @@ def main() -> None:
     for _ in range(ladders):
         # paired host probe: the CPU ceiling under THIS ladder's
         # machine state (it drifts with host/noisy-neighbor load)
-        probes.append(host_cpu_ceiling())
-        runs.append({c: run_level(c, sf_dir, copies)
+        probes.append(host_ceiling(md5_work))
+        runs.append({c: run_extraction(c, "cc", sf_dir, copies)
                      for c in (4, 8, 16, 32)})
 
     def eff(r, lo, hi):
         return (r[hi]["docs_per_sec"] / r[lo]["docs_per_sec"]) / 4.0
 
-    import statistics
     effs_4_16 = sorted(eff(r, 4, 16) for r in runs)
     effs_8_32 = sorted(eff(r, 8, 32) for r in runs)
     eff_4_16 = statistics.median(effs_4_16)
@@ -161,14 +60,13 @@ def main() -> None:
                                          for x in r.values()))[len(runs) // 2]
     best32 = max(r[32]["docs_per_sec"] for r in runs)
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
     r = mid[8]
     rows = "\n".join(
         f"| local[{c}] | {mid[c]['wall_sec']:.1f} | "
         f"{mid[c]['docs_per_sec']:.0f} | "
         f"{mid[c]['mb_per_sec']:.1f} |" for c in (4, 8, 16, 32))
     lines = [
-        "# BENCH/BASELINE — measured throughput & scaling efficiency",
+        f"## Scaling ladder: {sf_dir} ×{copies}, {ladders} ladder(s)",
         "",
         "Protocol (BASELINE.md §B): identical extraction job, identical "
         f"input; {ladders} complete fresh-JVM ladders (each = all four "
@@ -186,7 +84,7 @@ def main() -> None:
         f"Input: {r['n_docs']:,} synthesized Common-Crawl-style pages "
         f"({r['mb']:.0f} MB of HTML) from {sf_dir} ×{copies} "
         "amplification; job = full HTML parse + block scoring + "
-        "boilerplate strip + span emission (mapInPandas, single narrow "
+        "boilerplate strip + span emission (mapInArrow, single narrow "
         "stage, no shuffle of the html column).",
         "",
         "Representative (median-throughput) ladder:",
@@ -207,7 +105,7 @@ def main() -> None:
            "(below 0.8 — full-machine saturation, see controlled "
            "experiment below)"),
         "",
-        "## Controlled experiment: host CPU ceiling",
+        "### Controlled experiment: host CPU ceiling",
         "",
         "Before each ladder, a Spark-free probe ran N independent "
         "PROCESSES of pure-CPU work (hashlib md5 loops — no JVM, no "
@@ -232,18 +130,15 @@ def main() -> None:
         "",
         "The timed stage contains no shuffle and no driver round-trips, "
         "so on a real cluster the scaling bound is input-split balance, "
-        "not network or coordination. All ladders (JSON):",
+        "not network or coordination. All ladders (JSON; the medians "
+        "are the summary line below):",
         "```json",
         json.dumps([{f"local{c}": rr[c] for c in rr} for rr in runs]
-                   + [{"host_probes": probes}]
-                   + [{"efficiency_4_16_median": round(eff_4_16, 4),
-                       "efficiency_8_32_median": round(eff_8_32, 4),
-                       "host_ceiling_8_32_median": round(ceiling_8_32, 4),
-                       "engine_8_32_normalized": round(norm_8_32, 4)}]),
+                   + [{"host_probes": probes}]),
         "```",
+        "",
     ]
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
+    print("\n".join(lines))
     print(json.dumps({"efficiency_4_16": round(eff_4_16, 4),
                       "efficiency_8_32": round(eff_8_32, 4),
                       "host_ceiling_8_32": round(ceiling_8_32, 4),

@@ -10,8 +10,8 @@ throughput roughly in proportion to their BYTES (graceful), not stall a
 straggler task or blow executor memory (the uncapped deep-nesting path
 table alone would be ~40 GB for one page).
 
-Each config runs in a fresh subprocess/JVM, mirroring
-scripts/bench_scaling.py's protocol.
+Each config runs in a fresh local[32] JVM (``benchkit.run_extraction``;
+the bomb corpus is its ``bombs`` kind).
 
 Usage: python scripts/bench_stress.py [sf_dir] [copies]
 """
@@ -19,90 +19,23 @@ Usage: python scripts/bench_stress.py [sf_dir] [copies]
 from __future__ import annotations
 
 import json
-import subprocess
 import sys
 
-_CHILD = r"""
-import datetime, json, os, sys, threading, time
-sys.path.insert(0, "/root/repo")
-mode, sf_dir, copies = sys.argv[1], sys.argv[2], int(sys.argv[3])
-from my_ocr_spark.session import get_spark
-from my_ocr_spark.operators.extract import extract_docs
-from bench import build_amplified_corpus
-from pyspark.sql import functions as F
+from benchkit import run_extraction
 
-spark = get_spark(app_name=f"stress-{mode}", master="local[32]",
-                  shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-corpus = build_amplified_corpus(spark, sf_dir, copies)
-if mode == "skewed":
-    from my_ocr_spark.fixtures import make_html_bomb
-    ts = datetime.datetime(2024, 6, 1)
-    rows = []
-    for i in range(30):
-        kind, size = [("blocks", 100_000), ("deep", 60_000),
-                      ("megatext", 4_000_000)][i % 3]
-        rows.append((f"https://megahost.example/bomb/{i}", ts,
-                     make_html_bomb(kind, size, seed=100 + i).encode(),
-                     "", "en"))
-    bombs = spark.createDataFrame(rows, schema=corpus.schema)
-    corpus = corpus.unionByName(bombs)
-n_docs, n_bytes = corpus.select(
-    F.count("*"), F.sum(F.octet_length("html"))).collect()[0]
-
-peak = {"mb": 0.0}
-stop = threading.Event()
-def sample():          # host-wide RSS: this box runs only this job
-    while not stop.is_set():
-        total = 0
-        for pid in os.listdir("/proc"):
-            if pid.isdigit():
-                try:
-                    with open(f"/proc/{pid}/statm") as f:
-                        total += int(f.read().split()[1])
-                except OSError:
-                    pass
-        peak["mb"] = max(peak["mb"], total * 4096 / 1e6)
-        time.sleep(0.3)
-t = threading.Thread(target=sample, daemon=True); t.start()
-
-# warm-up must touch every partition (see bench_scaling.py note)
-extract_docs(corpus.filter(
-    F.pmod(F.xxhash64("url"), F.lit(50)) == 0)).count()
-t0 = time.perf_counter()
-n_out = extract_docs(corpus).count()
-wall = time.perf_counter() - t0
-stop.set()
-assert n_out == n_docs
-print(json.dumps({"mode": mode, "n_docs": int(n_docs),
-                  "mb": n_bytes / 1e6, "wall_sec": round(wall, 2),
-                  "docs_per_sec": round(n_docs / wall),
-                  "mb_per_sec": round(n_bytes / 1e6 / wall, 1),
-                  "peak_rss_mb": round(peak["mb"])}), flush=True)
-try:
-    spark.stop()
-except Exception:
-    pass
-"""
-
-
-def run(mode: str, sf_dir: str, copies: int) -> dict:
-    p = subprocess.run([sys.executable, "-c", _CHILD, mode, sf_dir,
-                        str(copies)], capture_output=True, text=True,
-                       timeout=1800, cwd="/root/repo")
-    if p.returncode != 0:
-        raise RuntimeError(p.stderr[-2000:])
-    return json.loads(p.stdout.strip().splitlines()[-1])
+# what each run line reports besides its mode
+_KEYS = ("n_docs", "mb", "wall_sec", "docs_per_sec", "mb_per_sec",
+         "peak_rss_mb")
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 200
     out = []
-    for mode in ("uniform", "skewed"):
-        r = run(mode, sf_dir, copies)
-        out.append(r)
-        print(json.dumps(r), flush=True)
+    for mode, corpus in (("uniform", "cc"), ("skewed", "bombs")):
+        r = run_extraction(32, corpus, sf_dir, copies)
+        out.append({"mode": mode, **{k: r[k] for k in _KEYS}})
+        print(json.dumps(out[-1]), flush=True)
     u, s = out
     extra_mb = s["mb"] - u["mb"]
     print(json.dumps({

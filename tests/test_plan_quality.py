@@ -12,12 +12,30 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+_NODE_NAME = re.compile(r"^[ :+|-]*(?:\*\(\d+\) )?(\w+)", re.M)
+
+
 def _n_exchanges(plan: str) -> int:
-    """Count Exchange nodes without also matching ReusedExchange
-    (plan.count("Exchange") counts the substring inside "ReusedExchange",
-    so a plan where Spark reuses an exchange would fail an equality
-    assertion spuriously)."""
-    return len(re.findall(r"(?<!Reused)Exchange", plan))
+    """Count exchange nodes (shuffle or broadcast) by node name only. A
+    ReusedExchange is not a new exchange, and its description names the
+    node it reuses ("ReusedExchange [..], Exchange hashpartitioning(..)"),
+    so neither may be counted."""
+    return sum(1 for name in _NODE_NAME.findall(plan)
+               if name.endswith("Exchange") and name != "ReusedExchange")
+
+
+def test_n_exchanges_skips_reused_exchange_description():
+    plan = ("AdaptiveSparkPlan isFinalPlan=false\n"
+            "+- SortMergeJoin [k#1L], [k#2L], Inner\n"
+            "   :- Sort [k#1L ASC NULLS FIRST], false, 0\n"
+            "   :  +- Exchange hashpartitioning(k#1L, 4), "
+            "ENSURE_REQUIREMENTS, [plan_id=10]\n"
+            "   :     +- *(1) Scan ExistingRDD[k#1L]\n"
+            "   +- Sort [k#2L ASC NULLS FIRST], false, 0\n"
+            "      +- ReusedExchange [k#2L], Exchange "
+            "hashpartitioning(k#1L, 4), ENSURE_REQUIREMENTS, "
+            "[plan_id=10]\n")
+    assert _n_exchanges(plan) == 1
 
 
 @pytest.fixture(scope="module")

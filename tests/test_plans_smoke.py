@@ -47,12 +47,12 @@ def test_bench_headline_names_are_registered():
 
     import __spark_entry__ as E
 
-    src = pathlib.Path("/root/repo/bench.py").read_text()
+    src = (pathlib.Path(__file__).parent.parent / "bench.py").read_text()
     tree = ast.parse(src)
     names = None
     for node in ast.walk(tree):
         if (isinstance(node, ast.Assign)
-                and getattr(node.targets[0], "id", None) == "headline"):
+                and getattr(node.targets[0], "id", None) == "HEADLINE"):
             names = [ast.literal_eval(e) for e in node.value.elts]
     assert names, "headline list not found in bench.py"
     missing = [n for n in names if n not in E.queries()]

@@ -66,3 +66,15 @@ def test_different_groups_never_match(spark):
     left = _mk(spark, [(1, 0, 0.0, 100.0)], "l")
     right = _mk(spark, [(2, 1, 0.0, 100.0)], "r")
     assert band_overlap_join(left, right, width=64.0).count() == 0
+
+
+def test_out_of_contract_coordinate_fails_loudly(spark):
+    from my_ocr_spark.operators.rangejoin import _FUSE_BITS, band_overlap_join
+
+    # bucket 2^(bits-1) no longer fits the fused key's signed bucket
+    # field: group * 2^bits + bucket would alias a neighbouring group
+    far = 64.0 * (1 << (_FUSE_BITS - 1))
+    left = _mk(spark, [(1, 0, far, far + 10.0)], "l")
+    right = _mk(spark, [(2, 0, 0.0, 10.0)], "r")
+    with pytest.raises(Exception, match="fused key"):
+        band_overlap_join(left, right, width=64.0).collect()
